@@ -641,68 +641,84 @@ del _snap, _n
 #          fuzz, plan pins in test_plans.py, 1x-8x curves in
 #          SCALING.md — registration is copy-paste once CORRECTNESS_r14
 #          lands.
+#   r16:   CORRECTNESS_r14 and CORRECTNESS_r15 both landed 50/50 on the
+#          r14 window (r15 re-ran it unrotated).  56 of 250 are stale at
+#          rotation time, all staled by engine edits made after the r14
+#          window froze: the r15 snapshot (commit 7f3e460 — sampling.py
+#          15 consumers, minhash.py 10, corpus_stats.py 6, plus graph /
+#          jaccard / spans / retrieval / kneser_ney / lm / bpe /
+#          vectorize / pca / drift) stales 47 of them; the other 9 are
+#          staled by r14 optimization commits alone (8483845: the
+#          knn.py / pq.py consumers; 3544d94: dedup_simhash).  Window =
+#          the 46 oldest-green stale names (green in r10, r11, r12, then
+#          the r13 cohort in registration order) + 4 family sentinels
+#          (qast_eq_filter, catalog_find, join_revenue_by_nation,
+#          multimodal_jpeg_decode).  10 stale names roll to the next
+#          window: vocab_coverage_thresholds, text_mattr_by_source,
+#          sparse_cosine_topk_docs, orders_pareto_revenue_share,
+#          doremi_source_weights, kneser_ney_logprob_docs,
+#          pretrain_pipeline_v2, train_test_ngram_leakage,
+#          exact_substring_cut, kn_discount_estimate.  The r15-staged
+#          pair stays unregistered (registry still 250).
 # ---------------------------------------------------------------------------
 
 DRIVER_WINDOW: list[str] = [
-    # -- the sole stale name: sampling.py's ntile->global_row_number swap
-    #    (commit c93eaf9) landed after the r13 window froze (VERDICT r13 #3)
-    "orders_rfm_segmentation",
-    # -- never driver-seen: the five r14-registered staged operators --
-    "dedup_paragraphs_corpus",
-    "dedup_soft_weights",
-    "dedup_survivorship_funnel",
-    "text_char_entropy",
-    "source_ngram_overlap_matrix",
-    # -- engine edits THIS round: verify first --
-    # containment.py (ADVICE r13: eager fill runs off-cache — order fixed)
-    "dedup_containment_prefix",
-    # findsql.py (ADVICE r13: cache-entry mutation moved under the lock)
-    "server_find_real",
-    # -- longest-unverified re-greens: the complete r2 cohort... --
-    "agg_grouping_sets",
-    "agg_rollup_flag_status",
-    "anti_join_customers_no_final",
-    "catalog_latest_revision",
-    "distinct_event_users",
-    "events_hourly",
-    "events_props_sum",
-    "events_props_variant",
-    "extract_json_field",
-    "multimodal_bytes_meta",
-    "part_brand_stats",
-    "qast_array_overlap",
-    "qast_extract_regex",
-    "qast_find_regex",
-    "qast_maths_composite",
-    "semi_join_orders_shipped_late",
-    "topk_orders",
-    "topk_orders_per_segment",
-    # -- ...the complete r3 cohort... --
-    "agg_pricing_summary",
-    "approx_distinct_users",
-    "customer_order_distribution",
-    "disjunctive_filter_revenue",
-    "excess_volume_suppliers",
-    "idle_rich_customers",
-    "important_part_values",
-    "incremental_rollup_events",
-    "join_local_supplier_volume",
-    "large_order_customers",
-    "late_lines_by_priority",
-    "market_share_by_year",
-    "min_unit_price_supplier",
-    "profit_by_nation_year",
-    "promo_revenue_ratio",
-    "shipping_priority",
-    "small_qty_order_revenue",
-    "sole_returning_supplier",
-    "top_supplier_by_revenue",
-    "volume_shipping_pairs",
-    "window_running_sum",
-    # -- ...and the three oldest r4-era names --
-    "agg_argmax_order",
-    "agg_corr_price_qty",
-    "agg_cube_status",
+    # -- stale, oldest green first: r10 greens (pq.py / knn.py / pca.py) --
+    "embedding_quantize_int8",
+    "embedding_knn_graph",
+    "embedding_pca_power",
+    "embedding_knn_graph_ivf",
+    "embedding_knn_graph_ivf2",
+    # -- r11 greens (pq.py / knn.py / drift.py) --
+    "ann_pq_adc_topk",
+    "ann_ivfpq_topk",
+    "embedding_hard_negatives",
+    "embedding_centroid_drift",
+    # -- r12 greens (retrieval / simhash / jaccard / corpus_stats /
+    #    minhash / lm / vectorize / pq / graph / bpe) --
+    "text_tfidf_top_terms",
+    "bm25_search",
+    "dedup_simhash",
+    "decontaminate_train_eval",
+    "corpus_ngram_novelty",
+    "dedup_canonical_docs",
+    "text_unigram_logprob",
+    "text_feature_hashing",
+    "dedup_graph_triangles",
+    "embedding_pq_codes",
+    "pagerank_dedup_graph",
+    "dedup_graph_bfs_depth",
+    "source_token_js",
+    "bpe_train_merges",
+    "bpe_apply_fertility",
+    # -- r13 greens, registration order (22 of 32; the rest roll over) --
+    "dedup_ngram_jaccard",
+    "dedup_clusters",
+    "dedup_minhash_lsh",
+    "dedup_winnow",
+    "train_test_split_counts",
+    "stratified_sample_orders",
+    "jaccard_topk_similar_docs",
+    "dedup_incremental_batch",
+    "contrastive_negative_samples",
+    "mixture_resample_corpus",
+    "leakage_safe_split_docs",
+    "pipeline_pretrain_corpus",
+    "weighted_sample_docs",
+    "dedup_common_spans",
+    "dsir_importance_resampling",
+    "vocab_oov_rate",
+    "text_bigram_backoff_logprob",
+    "shard_assign_balanced",
+    "temperature_mixture_langs",
+    "curriculum_order_docs",
+    "ngram_diversity_by_source",
+    "zipf_slope_by_source",
+    # -- family sentinels (fresh, driver-green) --
+    "qast_eq_filter",
+    "catalog_find",
+    "join_revenue_by_nation",
+    "multimodal_jpeg_decode",
 ]
 
 

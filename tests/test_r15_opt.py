@@ -20,7 +20,14 @@ def spark():
 
 
 def _n_persistent(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+    # Count through SparkContext.persistentRdds, the registry itself, which
+    # holds its RDDs by weak reference.  JavaSparkContext.getPersistentRDDs()
+    # would instead build a new Java map with a strong reference to every
+    # live RDD; py4j frees that map only when its finalizer thread gets to
+    # the Python proxy (it sleeps 1 s when idle), so each poll would pin
+    # every block through the next System.gc() and the count could never
+    # fall.
+    return spark.sparkContext._jsc.sc().persistentRdds().size()
 
 
 def test_materialize_local_default_cuts_lineage(spark):
@@ -118,7 +125,7 @@ def test_centroid_drift_handles_odd_vector_column_name(spark):
     from comlake_core_spark.operators.similarity.drift import centroid_drift
 
     rows = [(i, "l0", [float(i % 3), 1.0]) for i in range(8)]
-    emb = spark.createDataFrame(rows, "vec_id long, label string, my vec array<double>")
+    emb = spark.createDataFrame(rows, "vec_id long, label string, `my vec` array<double>")
     out = centroid_drift(
         emb, (F.col("vec_id") % 2).cast("int"), vec_col="my vec", dim=2
     ).collect()
