@@ -22,7 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from comlake_core_spark.session import get_spark
+from comlake_core_spark.session import get_spark, release_materialized
 from comlake_core_spark.workloads import REGISTRY
 
 HEADLINE = [
@@ -381,7 +381,9 @@ def session_metrics(spark) -> dict:
                 except OSError:
                     pass
     out["localdir_mb"] = total // 1048576
-    out["persistent_rdds"] = spark.sparkContext._jsc.getPersistentRDDs().size()
+    # the weak registry: getPersistentRDDs() would build a map of strong
+    # references that pins every block until py4j frees its proxy
+    out["persistent_rdds"] = spark.sparkContext._jsc.sc().persistentRdds().size()
     return out
 
 
@@ -389,18 +391,14 @@ def reset_session_state(spark) -> None:
     """Inter-rep isolation, shared with scripts/bench_reconcile.py so the
     reconcile measurements run under the SAME session conditions as the
     bench they reconcile (review r8 #6)."""
-    spark.catalog.clearCache()
-    # clearCache() drops CACHE TABLE / persist() blocks but NOT
-    # localCheckpoint RDDs — and the checkpoint-heavy workloads
-    # (DoReMi rounds, two-level IVF, connected components) each
-    # leave eagerly-materialized RDDs pinned until their Python
+    # Cached frames AND localCheckpoint RDDs: the checkpoint-heavy
+    # workloads (DoReMi rounds, two-level IVF, connected components)
+    # each leave eagerly-materialized RDDs pinned until their Python
     # DataFrame objects happen to be GC'd.  100 queries in, that
-    # residue is executor-memory pressure the next timing pays —
-    # the session-position effect BENCH_RECONCILE_r08.json
-    # measures (isolated medians 1.2-3.4x below same-code
-    # in-session medians).  Drop them explicitly.
-    for _jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        _jrdd.unpersist(False)
+    # residue is executor-memory pressure the next timing pays — the
+    # session-position effect BENCH_RECONCILE_r08.json measures
+    # (isolated medians 1.2-3.4x below same-code in-session medians).
+    release_materialized(spark)
     # collect the garbage the dropped cache blocks left behind
     # now, not as a full-GC pause inside the next timing
     spark._jvm.System.gc()

@@ -106,6 +106,11 @@ def _containment_stages(df, threshold, text_col, id_col, k_shingle, max_df):
     # particular one, so swapping the r8-r14 string tie-break for the id
     # changes which pairs are CANDIDATES but provably not which pairs
     # VERIFY (oracle-checked bit-identical at sf0.1 and sf1 x8/x10/x12).
+    # Once-only condition: monotonically_increasing_id depends on the
+    # partition layout of the run that computes it, so the gram ids agree
+    # across ranked's three consumers (candidate prefixes, postings, and
+    # isets' verify sets) only because materialize's checkpoint cannot be
+    # recomputed — each consumer reads the one computed copy.
     ranked = (
         cposts.withColumn("_rn", F.row_number().over(w))
         .withColumn("_gc", F.count(F.lit(1)).over(wid))

@@ -9,7 +9,9 @@ here to match local cores, ~2-3x total executor cores on a cluster.
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = (
@@ -26,7 +28,12 @@ TABLE_NAMES = (
 )
 
 
-def get_spark(app_name: str = "comlake_core_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(
+    app_name: str = "comlake_core_spark",
+    shuffle_partitions: int | None = None,
+    *,
+    _periodic_gc: str = "30min",
+) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     - AQE enabled: runtime coalescing of shuffle partitions, skew-join
@@ -132,26 +139,30 @@ def get_spark(app_name: str = "comlake_core_spark", shuffle_partitions: int | No
             "true" if os.environ.get("SPARK_GRAFT_DF_DEBUG") == "1" else "false",
         )
         # r14 NOTE on checkpoint-block lifetime: materialized-once frames
-        # are lazy localCheckpoints now (OPTIMIZATION_r14.md Change 5; r15:
-        # routed through materialize() above, strategy-selectable) and
-        # their blocks are spill-only — NOT LRU-evictable like cache
-        # blocks — so in a long-lived session they are reclaimed only when
-        # the ContextCleaner's weak refs get processed after a JVM GC.
+        # are lazy localCheckpoints (OPTIMIZATION_r14.md Change 5, through
+        # materialize() below) and their blocks are spill-only — NOT
+        # LRU-evictable like cache blocks — so in a long-lived session they
+        # are reclaimed only by release_materialized or when the
+        # ContextCleaner's weak refs get processed after a JVM GC.
         # Sweeps/benches handle this with bench.reset_session_state's
-        # explicit per-rep GC (the unreset r14 sf1 sweep measured
+        # explicit per-rep sweep and GC (the unreset r14 sf1 sweep measured
         # pretrain_pipeline_v2 x8 reps of [10.3, 45.4, 10.6] before that
         # fix).  A lower spark.cleaner.periodicGC.interval (default 30min)
         # is the deployment-side knob for sessions that run untrimmed for
-        # hours; it is deliberately NOT set in the BATCH default — a
+        # hours; it is deliberately NOT lowered in the BATCH default — a
         # background System.gc can land inside a timed query (back-to-back
         # full benches with and without 5min read 112.25 s/canary 6.63 vs
         # 115.14 s/canary 7.93) — but the long-lived SERVING entry points
         # opt in through get_serving_spark below (VERDICT r14 #3: the
         # serving path had no reset and only a comment).
     )
-    periodic_gc = os.environ.get("SPARK_GRAFT_PERIODIC_GC")
-    if periodic_gc:
-        builder = builder.config("spark.cleaner.periodicGC.interval", periodic_gc)
+    # Always set, 30min being Spark's own default: the conf that launches
+    # the JVM becomes its system properties, so a batch session started
+    # after a stopped serving session would otherwise inherit its 5min.
+    builder = builder.config(
+        "spark.cleaner.periodicGC.interval",
+        os.environ.get("SPARK_GRAFT_PERIODIC_GC", _periodic_gc),
+    )
     spark = builder.getOrCreate()
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
@@ -175,76 +186,70 @@ def get_serving_spark(app_name: str = "comlake-serving") -> SparkSession:
 
     Must run BEFORE any SparkContext exists in the process — the cleaner
     reads the interval at context start (a getOrCreate-reused session
-    keeps whatever cadence it was created with)."""
-    os.environ.setdefault("SPARK_GRAFT_PERIODIC_GC", "5min")
-    return get_spark(app_name)
+    keeps whatever cadence it was created with), so a warning is issued
+    when one already exists."""
+    if SparkContext._active_spark_context is not None:
+        warnings.warn(
+            "a SparkContext already exists: get_serving_spark reuses it with "
+            "its own spark.cleaner.periodicGC.interval, not the 5min serving "
+            "cadence",
+            stacklevel=2,
+        )
+    return get_spark(app_name, _periodic_gc="5min")
 
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Materialize-once barrier for multiply-read model tables (ADVICE
-    r14: one helper, strategy selected by config, instead of hard-coded
-    localCheckpoint at ~20 operator sites).
+    """Materialize-once barrier for multiply-read model tables: a
+    ``localCheckpoint`` of ``df`` (lazy unless ``eager``).
 
     Every caller is a frame that several downstream consumers scan
     (minhash signature index, KN model tables, tf/df aggregates, edge
     lists): without a barrier each consumer re-executes the upstream
-    pipeline AND re-inlines its logical plan.  Strategy from
-    ``SPARK_GRAFT_MATERIALIZE``:
+    pipeline AND re-inlines its logical plan.  The checkpoint cuts the
+    lineage and skips the columnar cache write (measured r14: KN query
+    3.04 s persist vs 2.17 s checkpoint).
 
-    - ``local`` (default): ``localCheckpoint`` — fastest (no columnar
-      cache write; measured r14: KN query 3.04 s persist vs 2.17 s
-      checkpoint) and cuts lineage.  Trade-offs for long-lived sessions:
-      blocks are executor-local and spill-only (NOT LRU-evictable — they
-      pin storage until the ContextCleaner reclaims them after the
-      Python/JVM references die and a JVM GC runs), and they do not
-      survive executor loss or dynamic-allocation decommission.  Batch
-      harnesses reset between queries (bench.reset_session_state);
-      long-lived serving sessions bound the dead-block window with
-      ``spark.cleaner.periodicGC.interval`` (set by get_serving_spark).
-    - ``persist``: StorageLevel-managed cache — LRU-evictable and
-      recomputable from lineage (safe under executor loss and memory
-      pressure), but keeps the full logical plan (driver-side
-      re-analysis per consumer) and pays the columnar cache write.
-      The posture for clusters with dynamic allocation.
-    - ``reliable``: ``checkpoint()`` to ``spark.checkpointDir`` —
-      survives executor loss AND cuts lineage; the posture for multi-
-      hour cluster pipelines (requires ``sc.setCheckpointDir``).
+    Contract callers rely on: the blocks are spill-only and cannot be
+    recomputed, so the frame is computed exactly once and every consumer
+    reads the same rows.  Non-deterministic columns computed upstream —
+    containment's ``monotonically_increasing_id`` gram ids — agree across
+    consumers only because of this.  A lost block fails loudly instead of
+    recomputing different values.
 
-    Not routed through here: layout-pinned eager checkpoints
-    (global_row_number and the IVF index builds need "recompute = loud
-    failure" semantics that persist cannot give) and iterative-loop
-    round frames (graph loops need the lineage CUT itself — persist
-    would grow the plan per round)."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode == "persist":
-        df = df.persist()
-        if eager:
-            df.count()
-        return df
-    if mode == "reliable":
-        return df.checkpoint(eager=eager)
-    if mode != "local":
-        raise ValueError(f"SPARK_GRAFT_MATERIALIZE must be local|persist|reliable, got {mode!r}")
+    Trade-offs for long-lived sessions: blocks are executor-local and NOT
+    LRU-evictable — they pin storage until release_materialized drops
+    them or the ContextCleaner reclaims them after the Python/JVM
+    references die and a JVM GC runs — and they do not survive executor
+    loss or dynamic-allocation decommission.  Batch harnesses sweep
+    between queries (bench.reset_session_state); long-lived serving
+    sessions bound the dead-block window with
+    ``spark.cleaner.periodicGC.interval`` (set by get_serving_spark)."""
     return df.localCheckpoint(eager=eager)
 
 
 def release_materialized(spark: SparkSession) -> int:
-    """Explicitly drop every materialized block (persist + localCheckpoint)
-    in the session; returns the number of frames dropped.
+    """Drop every materialized block in the session: ``clearCache()``
+    unregisters every cached frame (``persist()`` / ``CACHE TABLE``) from
+    the CacheManager, then every RDD still in the persistent-RDD registry
+    — localCheckpoint blocks above all — is unpersisted.  Returns the
+    number of registry RDDs dropped by the second step.
 
-    This is the deterministic teardown for a long-lived session (VERDICT
-    r14 #3).  The blocks of unreachable frames are also GC-reclaimable:
-    the ContextCleaner drops them once their Python and JVM references
-    die and a JVM GC runs (tests/test_r15_opt.py pins this for
-    minhash_lsh_pairs), but when that happens depends on GC timing.  This
-    sweep frees every block at a point the caller chooses.
-    bench.reset_session_state does the same sweep inline between timed
-    queries; perfbench/batch.py calls this between queries.
+    Both steps are needed: unpersisting a cached frame's RDD alone frees
+    its blocks but leaves the CacheManager entry, so the frame still
+    reports a storage level and is recomputed on every read; clearCache()
+    alone leaves localCheckpoint blocks pinned.
+
+    The blocks of unreachable frames are also GC-reclaimable: the
+    ContextCleaner drops them once their Python and JVM references die
+    and a JVM GC runs, but when that happens depends on GC timing.  This
+    sweep frees every block at a point the caller chooses.  Callers:
+    bench.reset_session_state between timed reps, and perfbench/batch.py
+    between queries.
 
     Safety: only call at a quiescent point — a dropped localCheckpoint
     block cannot be recomputed, so an in-flight computation that still
-    needs one fails loudly.  (persist-mode blocks recompute from
-    lineage; the loud failure is specific to checkpoint blocks.)"""
+    needs one fails loudly."""
+    spark.catalog.clearCache()
     dropped = 0
     for _jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         _jrdd.unpersist(False)

@@ -626,21 +626,6 @@ del _snap, _n
 #          oldest r4-era names (agg_argmax_order, agg_corr_price_qty,
 #          agg_cube_status), so the oldest evidence in the registry
 #          advances from r2 to r4.
-#   r15 STAGING (built during r14, ships as code + pytest — the
-#          r7/r11/r12/r13/r14 pattern): perplexity_tiers_by_source
-#          (operators/text/tiers.py — CCNet head/middle/tail thirds
-#          per source over the corpus-trained unigram fluency score;
-#          per-source rank = ONE global_row_number pass + an S-row
-#          broadcast offset join, no per-source window) and
-#          decontaminate_semantic (operators/similarity/decon.py —
-#          closest eval-set neighbor by deterministic fold cosine +
-#          threshold flag, eval side a FIXED 20-vector slice under the
-#          benchmarks-don't-grow deployment contract); both DuckDB
-#          oracles staged bit-exact at sf0.001 AND sf0.01 in
-#          tests/test_r15_staged.py with brute-force twins and seeded
-#          fuzz, plan pins in test_plans.py, 1x-8x curves in
-#          SCALING.md — registration is copy-paste once CORRECTNESS_r14
-#          lands.
 #   r16:   CORRECTNESS_r14 and CORRECTNESS_r15 both landed 50/50 on the
 #          r14 window (r15 re-ran it unrotated).  56 of 250 are stale at
 #          rotation time, all staled by engine edits made after the r14

@@ -218,29 +218,6 @@ def _char_entropy(spark, sf_dir):
     return char_entropy(docs)
 
 
-def _perplexity_tiers(spark, sf_dir):
-    from comlake_core_spark.operators.text.tiers import perplexity_tiers
-
-    docs = tables(spark, sf_dir)["documents"]
-    return perplexity_tiers(docs)
-
-
-def _semantic_decon(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from comlake_core_spark.operators.similarity.decon import semantic_decontaminate
-
-    emb = tables(spark, sf_dir)["embeddings"]
-    # FIXED 20-vector eval slice (the deployment contract: benchmarks do
-    # not grow with the corpus) — the unbounded %25 predicate made the
-    # builder's copies grow both sides and the curve track pair volume
-    return semantic_decontaminate(
-        emb,
-        lambda d: (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 500),
-        threshold=0.35,
-    )
-
-
 def _soft_dedup_weights(spark, sf_dir):
     from comlake_core_spark.operators.dedup.softdedup import soft_dedup_weights
 
@@ -291,9 +268,6 @@ CUSTOM_OPS = {
     "char_entropy_staged": _char_entropy,
     "soft_dedup_weights_staged": _soft_dedup_weights,
     "dedup_funnel_staged": _dedup_funnel,
-    # r15-staged operators: same pattern, measured during r14
-    "perplexity_tiers_staged": _perplexity_tiers,
-    "semantic_decon_staged": _semantic_decon,
 }
 
 

@@ -1117,49 +1117,3 @@ def test_funnel_union_of_tier_plans_no_pairs(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert P.has_partial_aggregate(df)
-
-
-def test_perplexity_tiers_no_per_source_window(spark):
-    """r15-staged CCNet tiers: the per-source rank must NOT be a
-    row_number window partitioned by source (a hot source funnels its
-    billions of documents through one task at 100 TB) — the plan rides
-    global_row_number (range exchange + map-only rank; its eager
-    localCheckpoint cuts the visible plan) plus an S-row broadcast
-    offsets join, so the executed plan holds NO Window operator and the
-    offsets join is a broadcast."""
-    from comlake_core_spark.operators.text.tiers import perplexity_tiers
-    from comlake_core_spark.session import tables
-
-    docs = tables(spark, SF, ["documents"])["documents"]
-    df = perplexity_tiers(docs)
-    df.write.mode("overwrite").format("noop").save()
-    plan = P.executed_plan(df)
-    assert "Window" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_semantic_decon_broadcast_eval_single_agg(spark):
-    """r15-staged semantic decontamination: the eval side is a broadcast
-    (the corpus streams ONCE through a broadcast nested-loop join — the
-    small-eval contract documented on the operator), the argmax is one
-    map-combined aggregate on the train id, and nothing corpus-sized is
-    exchanged twice."""
-    from pyspark.sql import functions as F
-
-    from comlake_core_spark.operators.similarity.decon import semantic_decontaminate
-    from comlake_core_spark.session import tables
-
-    emb = tables(spark, SF, ["embeddings"])["embeddings"]
-    df = semantic_decontaminate(
-        emb,
-        lambda d: (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 500),
-        threshold=0.35,
-    )
-    df.write.mode("overwrite").format("noop").save()
-    plan = P.executed_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert P.has_partial_aggregate(df)
-    assert P.count_shuffles(df) <= 1  # only the train-id aggregate exchange

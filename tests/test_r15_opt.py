@@ -1,17 +1,28 @@
-"""r15 optimization-round contracts: the materialize() strategy helper,
-checkpoint-block reclaimability (the serving-path lifetime contract),
-backtick-quoted interpolated identifiers, connected_components guards,
-and the serving session factory."""
+"""r15 optimization-round contracts: the materialize() helper, the
+release_materialized sweep, checkpoint-block reclaimability (the
+serving-path lifetime contract), backtick-quoted interpolated
+identifiers, connected_components guards, and the serving session
+factory."""
 
 from __future__ import annotations
 
 import gc
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from comlake_core_spark.session import get_spark, materialize, sql_ident
+from comlake_core_spark.session import (
+    get_serving_spark,
+    get_spark,
+    materialize,
+    release_materialized,
+    sql_ident,
+)
 
 
 @pytest.fixture(scope="module")
@@ -38,26 +49,26 @@ def test_materialize_local_default_cuts_lineage(spark):
     assert out.count() == 100
 
 
-def test_materialize_persist_mode(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-    df = spark.range(50).withColumn("x", F.col("id") + 1)
-    out = materialize(df)
-    assert out.storageLevel.useMemory  # persist marker applied
-    assert out.count() == 50
-    out.unpersist(True)
+def test_release_materialized_drops_cached_and_checkpointed(spark):
+    """The sweep drops both kinds of materialized frame: the blocks of a
+    lazy localCheckpoint, and a persisted frame's blocks AND its
+    CacheManager entry — unpersisting the registry's RDDs alone leaves
+    the frame listed as cached, so it reports a storage level and is
+    recomputed on every read."""
+    release_materialized(spark)
+    base = _n_persistent(spark)
+    cached = spark.range(1000).withColumn("x", F.col("id") * 3).persist()
+    cached.createOrReplaceTempView("r15_sweep_cached")
+    ckpt = materialize(spark.range(1000).withColumn("y", F.col("id") + 7))
+    assert cached.count() == 1000 and ckpt.count() == 1000
+    assert _n_persistent(spark) >= base + 2
+    assert spark.catalog.isCached("r15_sweep_cached")
 
-
-def test_materialize_persist_eager_fills(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "persist")
-    out = materialize(spark.range(10), eager=True)
-    assert out.storageLevel.useMemory
-    out.unpersist(True)
-
-
-def test_materialize_rejects_unknown_mode(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "nope")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_MATERIALIZE"):
-        materialize(spark.range(1))
+    assert release_materialized(spark) >= 1
+    assert _n_persistent(spark) == base
+    assert not spark.catalog.isCached("r15_sweep_cached")
+    assert cached.storageLevel == StorageLevel(False, False, False, False, 1)
+    spark.catalog.dropTempView("r15_sweep_cached")
 
 
 def test_repeated_heavy_query_blocks_are_reclaimable(spark):
@@ -155,16 +166,50 @@ def test_connected_components_edges_cut_same_answer(spark):
     assert got == want
 
 
-def test_get_serving_spark_sets_periodic_gc_default(monkeypatch):
-    """The serving entry point opts into the 5min ContextCleaner cadence
-    (VERDICT r14 #3); batch get_spark leaves the Spark default alone."""
+def test_get_serving_spark_leaves_environ_and_warns_on_existing_context(spark, monkeypatch):
+    """A SparkContext already exists (the module session), so the serving
+    cadence cannot apply: the factory warns, and it never writes the
+    process environment."""
     monkeypatch.delenv("SPARK_GRAFT_PERIODIC_GC", raising=False)
-    from comlake_core_spark.session import get_serving_spark
-
-    s = get_serving_spark("test-serving")
-    assert os.environ["SPARK_GRAFT_PERIODIC_GC"] == "5min"
+    before = dict(os.environ)
+    with pytest.warns(UserWarning, match="periodicGC"):
+        s = get_serving_spark("test-serving")
     assert s is not None
-    # explicit override wins
-    monkeypatch.setenv("SPARK_GRAFT_PERIODIC_GC", "2min")
-    get_serving_spark("test-serving")
-    assert os.environ["SPARK_GRAFT_PERIODIC_GC"] == "2min"
+    assert dict(os.environ) == before
+
+
+def test_serving_session_gets_5min_cadence_batch_session_does_not():
+    """In a fresh process: the serving session starts its context with the
+    5min ContextCleaner cadence (VERDICT r14 #3); a batch get_spark
+    session started after it stops, in the same JVM, is back on Spark's
+    30min default."""
+    code = textwrap.dedent(
+        """
+        import warnings
+        warnings.filterwarnings("error", message=".*SparkContext already exists")
+        from comlake_core_spark.session import get_serving_spark, get_spark
+        key = "spark.cleaner.periodicGC.interval"
+        s = get_serving_spark("t-serving")
+        print("serving", s.sparkContext.getConf().get(key))
+        s.stop()
+        b = get_spark("t-batch")
+        print("batch", b.sparkContext.getConf().get(key))
+        b.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_PERIODIC_GC"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = dict(line.split(" ", 1) for line in out.stdout.splitlines() if " " in line)
+    assert lines.get("serving") == "5min"
+    assert lines.get("batch") == "30min"
